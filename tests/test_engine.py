@@ -16,14 +16,20 @@ def _write_jsonl(items, path):
             f.write(json.dumps(it) + "\n")
 
 
-def test_engine_end_to_end_and_incremental(spark):
+def _write_build_and_append(td):
+    """JSONL files of the first 120 fixture works and of all of them (a
+    superset, so the second run appends only new works), and a lake path."""
     items = make_works()
+    w1, w2 = os.path.join(td, "w1.jsonl"), os.path.join(td, "w2.jsonl")
+    _write_jsonl(items[:120], w1)
+    _write_jsonl(items, w2)
+    return w1, w2, os.path.join(td, "lake")
+
+
+def test_engine_end_to_end_and_incremental(spark):
+    spark.catalog.clearCache()
     with tempfile.TemporaryDirectory() as td:
-        w1 = os.path.join(td, "w1.jsonl")
-        w2 = os.path.join(td, "w2.jsonl")
-        _write_jsonl(items[:120], w1)
-        _write_jsonl(items, w2)  # superset → only new works append
-        lake = os.path.join(td, "lake")
+        w1, w2, lake = _write_build_and_append(td)
 
         eng = Engine(spark)
         vista1 = eng.run(works_jsonl=w1, lake_root=lake)
@@ -51,6 +57,10 @@ def test_engine_end_to_end_and_incremental(spark):
             d.startswith("Anio=")
             for d in os.listdir(os.path.join(lake, "vista_analisis"))
         )
+    # shared stages are materialized with local checkpoints, which the
+    # ContextCleaner frees; a persisted DataFrame would stay in the
+    # session's cache after every run
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_cli_corpus_subcommand(spark, sf_dir, tmp_path):
@@ -79,3 +89,31 @@ def test_cli_corpus_subcommand(spark, sf_dir, tmp_path):
     assert {r["split"] for r in got.select("split").distinct().collect()} <= {
         "train", "val", "test"
     }
+
+
+#: Spark jobs of a build plus an append of the fixture corpus: 213
+#: measured, with a small margin for adaptive-execution plan changes
+JOB_BUDGET = 225
+
+
+def test_engine_job_budget(spark):
+    """Each shared stage of ``Engine.run`` is evaluated once, so a build
+    plus an append of the fixture corpus stays within a pinned Spark job
+    count. Before the lake tables were materialized ahead of the flat view
+    and the author replay was materialized once, the same two runs took
+    280 jobs; they take 213 now, under local[8] with 8 shuffle partitions."""
+    sc = spark.sparkContext
+    group = "test_engine_job_budget"
+    with tempfile.TemporaryDirectory() as td:
+        w1, w2, lake = _write_build_and_append(td)
+        eng = Engine(spark)
+        sc.setJobGroup(group, "Engine.run build + append")
+        try:
+            eng.run(works_jsonl=w1, lake_root=lake)
+            eng.run(works_jsonl=w2, lake_root=lake)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    print(f"Engine.run build + append: {jobs} Spark jobs")
+    assert jobs <= JOB_BUDGET, f"{jobs} Spark jobs > budget {JOB_BUDGET}"

@@ -14,6 +14,9 @@ barrazueta_pipeline_etl_crossref.py` → SQLite file). The equivalent here:
 Re-running ``run`` against the same lake is incremental and idempotent
 (plans/incremental.py), mirroring the reference's documented multi-run
 operation. ``python -m ups_crossref_etl_spark`` wraps this in a CLI.
+
+``run`` materializes the five lake tables once, before it overwrites the
+lake, and builds the flat view from those materialized tables.
 """
 
 from __future__ import annotations
@@ -79,14 +82,15 @@ class Engine:
         else:
             tables = ingest(self.spark, works_raw, catalog, max_works=max_works)
 
+        # materialize BEFORE overwriting the lake we may be reading from;
+        # each table is also read by the flat view and the sink, so the view
+        # is built on the checkpoints, not on the ingest DAG
+        tables = {k: v.localCheckpoint() for k, v in tables.items()}
         clean = flatview.clean_tables(tables)
+        # read by the sink and by every later chart and SQL query
         vista = flatview.build_vista_analisis(
             clean, catalog.select("SedeID", "Sede", "AreaAcademica")
-        )
-
-        # materialize BEFORE overwriting the lake we may be reading from
-        tables = {k: v.localCheckpoint() for k, v in tables.items()}
-        vista = vista.localCheckpoint()
+        ).localCheckpoint()
 
         sinks.write_lake(self.spark, tables, lake_root)
         sinks.write_table(vista, os.path.join(lake_root, "vista_analisis"),

@@ -135,12 +135,13 @@ def resolve_authors(
             F.col("Orcid").alias("orcid"),
         )
         occ = occ.unionByName(seeds)
-    occ = (
-        occ.distinct()
-        # five downstream consumers branch from occ (edges, join, replay);
-        # truncate lineage once instead of recomputing the ingest DAG
-        .localCheckpoint()
-    )
+    # A DataFrame read by more than one job is materialized once. occ is
+    # read by every connected-components round (through edges), the
+    # component-size guard and the replay (through occ_c). Lazy here and
+    # below: each is first read once, through a shuffle (distinct,
+    # groupBy), so that job stores every partition; a limit probe must not
+    # drive a lazy checkpoint, since it can stop short.
+    occ = occ.distinct().localCheckpoint(eager=False)
 
     # identity edges; name-only mentions get a self-edge so they surface
     # as singleton components
@@ -151,10 +152,11 @@ def resolve_authors(
     edges = occ.select(name_node.alias("src"), orcid_node.alias("dst")).distinct()
 
     comp = _connected_components(edges)
+    # read by the component-size guard and by the replay
     occ_c = occ.join(
         comp.withColumnRenamed("node", "_nn"),
         F.concat(F.lit("n:"), F.col("name_norm")) == F.col("_nn"),
-    ).drop("_nn")
+    ).drop("_nn").localCheckpoint(eager=False)
 
     big = (
         occ_c.groupBy("component")
@@ -177,9 +179,10 @@ def resolve_authors(
             raise RuntimeError(msg)
         warnings.warn(msg, RuntimeWarning, stacklevel=2)
 
+    # read by autores and by mapping, which callers run as separate jobs
     resolved = occ_c.groupBy("component").applyInPandas(
         lambda pdf: _replay_component(pdf), _RESOLVED_SCHEMA
-    )
+    ).localCheckpoint(eager=False)
 
     autores = (
         resolved.groupBy("NombreBusqueda")

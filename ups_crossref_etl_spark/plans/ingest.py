@@ -259,17 +259,22 @@ def ingest(
     *accepted* (gated) works, per SURVEY §2.7 O2. The reference's cap is
     page-order-dependent; ours takes the first N in DOI order so reruns
     are reproducible."""
-    works = normalize_works(works_raw)
+    # A DataFrame read by more than one action is materialized once, by a
+    # local checkpoint: the ContextCleaner frees its blocks, so no cached
+    # table outlives the run. works (JSON scan, Unicode pandas_udfs, DOI
+    # dedup) is read by the mention table below and by the obras and
+    # obra_tema jobs. Eager: the mention table's first job reads it from
+    # two parallel stages (the self-joins in tag_countries/label_sedes),
+    # which would both compute a lazy checkpoint's partitions.
+    works = normalize_works(works_raw).localCheckpoint()
     aff_rows = explode_author_affiliations(works)
     aff_rows = tag_countries(aff_rows, country_pattern_df(spark))
     aff_rows = label_sedes(aff_rows, catalog)
-    # five output tables branch from aff_rows (and the Unicode pandas_udfs
-    # upstream are the most expensive stage) — materialize once. At cluster
-    # scale this is a MEMORY_AND_DISK persist of the exploded mention table,
-    # the same table every downstream stage shuffles from.
-    from pyspark import StorageLevel
-
-    aff_rows = aff_rows.persist(StorageLevel.MEMORY_AND_DISK)
+    # the mention table is read by resolve_authors, afiliaciones, and the
+    # P7 gate that obras, obra_tema and obra_autor_afiliacion go through.
+    # Lazy: its first job (resolve_authors' distinct mentions) reads it
+    # once, through a shuffle, so that job stores every partition.
+    aff_rows = aff_rows.localCheckpoint(eager=False)
 
     # P7: keep works where any author-affiliation matched UPS (:662-663).
     # NOTE: autores/afiliaciones are built from ALL works — the reference
@@ -313,32 +318,24 @@ def ingest(
     autores, author_map = resolve_authors(aff_rows, seed_autores=seed_autores)
 
     # A4: per (DOI, author) the set of affiliations + sequence promotion
-    # ('first' if any occurrence is 'first', :656-659)
-    oaa = (
+    # ('first' if any occurrence is 'first', :656-659). Promotion is
+    # author-scoped, not affiliation-scoped: a window over (DOI, AutorID),
+    # whose shuffle also serves the distinct, so the mention join is
+    # evaluated once instead of once per side of a self-join.
+    author_rank = F.min(F.when(F.col("seq") == "first", 0).otherwise(1)).over(
+        Window.partitionBy("DOI", "AutorID")
+    )
+    obra_autor_afiliacion = (
         aff_kept.join(author_map, ["DOI", "author_pos"])
         .select(
             "DOI",
             "AutorID",
             F.xxhash64("aff_norm").alias("AfiliacionID"),
-            F.when(F.col("seq") == "first", 0).otherwise(1).alias("_seq_rank"),
-        )
-        .groupBy("DOI", "AutorID", "AfiliacionID")
-        .agg(F.min("_seq_rank").alias("_seq_rank"))
-    )
-    # promotion is author-scoped, not affiliation-scoped
-    seq_per_author = oaa.groupBy("DOI", "AutorID").agg(
-        F.min("_seq_rank").alias("_author_rank")
-    )
-    obra_autor_afiliacion = (
-        oaa.join(seq_per_author, ["DOI", "AutorID"])
-        .select(
-            "DOI",
-            "AutorID",
-            "AfiliacionID",
-            F.when(F.col("_author_rank") == 0, "first")
+            F.when(author_rank == 0, "first")
             .otherwise("additional")
             .alias("AutorSecuencia"),
         )
+        .distinct()
     )
 
     return {

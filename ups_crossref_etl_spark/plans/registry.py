@@ -62,97 +62,22 @@ _ROUND = 14
 #: gated query lacking committed verification evidence (CORRECTNESS_r*/
 #: FULLCHECK_r* union) is missing from this list.
 _CHANGED_THIS_ROUND = [
-    # round-14 (r13 verdict #7): the r13 wave-4 convergence-probe
-    # rewrites (hop_distances count+sum fixpoint; lazy checkpoint
-    # materialized by the convergence aggregate in connected_components
-    # / transitive_closure / the SCC doubling loop) changed these
-    # queries' physical paths but missed the r13 re-verification list —
-    # FULLCHECK covered them; the driver window re-samples them now.
-    "q_graph_scc",
-    "q_graph_transitive_closure",
-    "q_graph_eccentricity",
-    "q_graph_tree_betweenness",
-    "q_docs_neardup_cc",
-    "q_docs_quality_keeper",
-    # round-14 rank-stats fixed-cost wave (identical results, new
-    # physical paths — re-verify): standalone count()/collect() driver
-    # jobs folded into the single query plan as broadcast 1-row
-    # aggregates (wilcoxon n_pairs rides the range pass with an exact
-    # midrank correction; friedman/cochran/page/quade fold k_all and
-    # n_blocks; bh_adjust folds m; percent_rank_unique folds n), the
-    # _ranged_exclusive_cumsum / _ranged_suffix_min partition-offset
-    # folds moved in-plan (lazy checkpoint materialized by the
-    # broadcast build — zero standalone jobs per call), and duplicated
-    # subtrees merged into single grouped passes (friedman Σr², quade
-    # A=ΣS², cc checkpoints).
-    "q_events_wilcoxon",
-    "q_events_friedman",
-    "q_events_cochran_q",
-    "q_events_page_trend",
-    "q_events_bh_adjust",
-    "q_events_quade",
-    "q_events_mann_whitney",
-    "q_events_wasserstein_drift",
-    "q_events_jonckheere",
-    "q_events_brunner_munzel",
-    "q_events_ansari",
-    "q_events_mood",
-    "q_events_schoenfeld",
-    "q_events_cox_baseline",
-    "q_docs_ece",
-    "q_docs_ece_approx_bound",
-    "q_lineitem_kruskal_wallis",
-    # round-14: acf's centered table (scan+window+stats-join) fed three
-    # consumers and the final output re-joined stats — one lazy
-    # checkpoint + n_points riding the lag aggregate (max of a per-key
-    # constant). Identical results, new physical path.
-    "q_events_acf",
-    "q_events_pacf",
-    "q_events_ljung_box",
-    # round-14 (r13 verdict #6): text-dedup seed scans spread (md5 /
-    # xxhash64 keys are content-derived; downstream = exact counts,
-    # ordered windows, order-insensitive set membership — proven
-    # layout-invariant per operator) + lazy checkpoints for the
-    # multiply-consumed tokenized bases (spans base/grams, winnow
-    # fp/kept, minhash shingle rows eager→lazy).
-    "q_docs_remove_common_spans",
-    "q_docs_long_repeated_spans",
-    "q_docs_winnow_fingerprints",
-    "q_docs_winnow_overlap_pairs",
-    "q_docs_minhash_recall_bound",
-    "q_docs_dedup_survivors_bound",
-    # round-14 (r13 verdict #4/#5/#10): containment/setsim token-rank
-    # table broadcast when the input is bounded (file-bytes-gated,
-    # falls back to the shuffle join at scale) + checkpoints made lazy;
-    # adamic_adar/neighbor_jaccard/codegree ori+wedge checkpoints made
-    # lazy (standalone materialization jobs removed); frequent_pairs
-    # basket count folded in-plan; frequent_triples row-local triple
-    # expansion when every L1-pruned basket is narrow (width-probed,
-    # Apriori join path kept for wide baskets).
-    "q_docs_containment_join",
-    "q_docs_jaccard_join",
-    "q_basket_frequent_pairs",
-    "q_basket_frequent_triples",
-    "q_graph_adamic_adar",
-    "q_graph_adamic_adar_exact",
-    "q_graph_adamic_adar_cap_agreement",
-    "q_graph_neighbor_jaccard",
-    "q_graph_neighbor_jaccard_exact",
-    "q_graph_rectangles",
-    "q_graph_rectangles_exact",
-    # round-14: _cox_prepare's checkpoint made lazy (the counts
-    # aggregate materializes it in the same job — one job per fit
-    # instead of two; frozen time-partition boundaries unchanged).
-    "q_events_cox_bound",
-    "q_events_cox_multi_bound",
-    # round-14: one-shot multi-consumer checkpoints eager→lazy
-    # (item_cosine inter; pmi uni/bi_all; log_odds joined;
-    # source_overlap toks; theil_sen point table) — standalone
-    # materialization jobs removed, values unchanged.
-    "q_part_item_cosine",
-    "q_docs_source_overlap",
-    "q_docs_log_odds_keyness",
-    "q_docs_pmi_collocations",
+    # ingest() now materializes its shared stages once with local
+    # checkpoints (normalized works, the mention table — no longer a
+    # persist left in the cache — and resolve_authors' mentions,
+    # component join and replay), and the A4 sequence promotion is a
+    # window instead of a self-join. Every q_biblio_* query reaches
+    # ingest() → resolve_authors, so its physical path changed (results
+    # identical). The round-14 list this replaces was sampled in full by
+    # CORRECTNESS_r14.json.
+    "q_biblio_publications_per_year",
+    "q_biblio_publications_per_country",
+    "q_biblio_publications_per_area",
+    "q_biblio_table_counts",
+    "q_biblio_dashboard_filtered",
+    "q_biblio_afiliaciones_table",
+    "q_biblio_autores_digest",
+    "q_biblio_dashboard_filter_combos",
 ]
 
 #: Gated queries never yet sampled by a driver correctness window.
