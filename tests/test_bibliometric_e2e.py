@@ -18,7 +18,7 @@ from ups_crossref_etl_spark.plans.ingest import ingest
 from ups_crossref_etl_spark.schemas import works_raw_schema
 from ups_crossref_etl_spark.sources.catalog import SEED_ROWS, seed_catalog
 
-from bibliometric_fixture import make_works
+from bibliometric_fixture import UPS, make_works
 from bibliometric_oracle import (  # noqa: F401 (author_name re-exported for debugging)
     author_name,
     norm_nfc,
@@ -55,9 +55,8 @@ def pipeline(spark):
     catalog = seed_catalog(spark)
     tables = ingest(spark, works_raw, catalog)
     tables = {k: v.cache() for k, v in tables.items()}
-    clean = flatview.clean_tables(tables)
     sedes_areas = catalog.select("SedeID", "Sede", "AreaAcademica")
-    vista = flatview.build_vista_analisis(clean, sedes_areas).cache()
+    vista = flatview.build_vista_analisis(tables, sedes_areas).cache()
     expected = run_oracle(items, SEED_ROWS)
     return tables, vista, expected
 
@@ -129,6 +128,33 @@ def test_vista_match(pipeline):
     assert set(got) == set(want)
     for doi in want:
         assert got[doi] == want[doi], f"vista mismatch for {doi}"
+
+
+def test_vista_single_normalization_pass(spark):
+    """The flat view reads the lake tables as ingest wrote them. A
+    double-escaped title/publisher keeps one escape level and a
+    double-prefixed DOI keeps one prefix, exactly as in ``obras`` and the
+    oracle; a second normalization pass would unescape and strip again,
+    and the bridge rows of the second work would then lose their DOI."""
+    ups = f"{UPS}, Cuenca, Ecuador"
+    items = [
+        {"doi": "10.9/a", "title": ["A &amp;amp; B"], "publisher": "X &amp;amp; Y",
+         "type": "journal-article",
+         "author": [{"given": "Ana", "family": "Loja", "affiliation": [{"name": ups}]}]},
+        {"doi": "https://doi.org/https://doi.org/10.9/b", "title": ["Plain"],
+         "publisher": "P", "type": "journal-article",
+         "author": [{"given": "Ana", "family": "Loja", "affiliation": [{"name": ups}]}]},
+    ]
+    catalog = seed_catalog(spark)
+    tables = ingest(spark, spark.createDataFrame(items, schema=works_raw_schema), catalog)
+    vista = flatview.build_vista_analisis(
+        tables, catalog.select("SedeID", "Sede", "AreaAcademica")
+    )
+    cols = ("DOI", "Titulo", "Editorial", "Autores", "Afiliaciones", "Sedes", "Areas",
+            "Paises", "PaisesCodigo", "UPS_Flag", "Temas")
+    got = {tuple(r[c] for c in cols) for r in vista.collect()}
+    want = {tuple(v[c] for c in cols) for v in run_oracle(items, SEED_ROWS)["vista"]}
+    assert got == want
 
 
 def test_acceptance_charts(pipeline):

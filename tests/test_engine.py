@@ -6,8 +6,24 @@ import json
 import os
 import tempfile
 
-from ups_crossref_etl_spark.engine import Engine
+from ups_crossref_etl_spark.engine import TABLES, Engine
 from ups_crossref_etl_spark.fixtures import make_works
+
+#: lake table → its key
+KEYS = {
+    "obras": ["DOI"],
+    "obra_tema": ["DOI", "Tema"],
+    "autores": ["AutorID"],
+    "afiliaciones": ["AfiliacionID"],
+    "obra_autor_afiliacion": ["DOI", "AutorID", "AfiliacionID"],
+}
+#: (child table, column, parent table) of every lake foreign key
+FOREIGN_KEYS = [
+    ("obra_autor_afiliacion", "DOI", "obras"),
+    ("obra_autor_afiliacion", "AutorID", "autores"),
+    ("obra_autor_afiliacion", "AfiliacionID", "afiliaciones"),
+    ("obra_tema", "DOI", "obras"),
+]
 
 
 def _write_jsonl(items, path):
@@ -26,6 +42,29 @@ def _write_build_and_append(td):
     return w1, w2, os.path.join(td, "lake")
 
 
+def _jobs_in_group(spark, group, fn):
+    """(fn(), number of Spark jobs fn submitted)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _assert_unique_and_closed(tables):
+    """The flat view reads the lake tables as they are, so each must be
+    unique by its key and every foreign key must exist in its parent."""
+    for name, keys in KEYS.items():
+        df = tables[name]
+        assert df.count() == df.select(*keys).distinct().count(), f"{name} not unique"
+    for child, col, parent in FOREIGN_KEYS:
+        orphans = tables[child].join(tables[parent], col, "left_anti").count()
+        assert orphans == 0, f"{orphans} {child}.{col} missing from {parent}"
+
+
 def test_engine_end_to_end_and_incremental(spark):
     spark.catalog.clearCache()
     with tempfile.TemporaryDirectory() as td:
@@ -41,10 +80,21 @@ def test_engine_end_to_end_and_incremental(spark):
         vista2 = eng.run(works_jsonl=w2, lake_root=lake)  # incremental
         n2 = vista2.count()
         assert n2 >= n1
+        _assert_unique_and_closed(eng.load_lake(lake))
 
         # third run with identical input: no growth (idempotence)
         vista3 = eng.run(works_jsonl=w2, lake_root=lake)
         assert vista3.count() == n2
+
+        # the lake is read with its declared schemas: no inference job, and
+        # an append's view keeps the build's column order
+        assert vista3.columns == vista1.columns
+        tables, jobs = _jobs_in_group(spark, "load_lake", lambda: eng.load_lake(lake))
+        assert jobs == 0, f"load_lake submitted {jobs} Spark jobs"
+        for name, schema in TABLES.items():
+            got = [(f.name, f.dataType) for f in tables[name].schema]
+            assert got == [(f.name, f.dataType) for f in schema], name
+        _assert_unique_and_closed(tables)
 
         runs = eng.runs(lake).collect()
         assert {r["RunID"] for r in runs} == {1, 2, 3}
@@ -91,29 +141,27 @@ def test_cli_corpus_subcommand(spark, sf_dir, tmp_path):
     }
 
 
-#: Spark jobs of a build plus an append of the fixture corpus: 213
+#: Spark jobs of a build plus an append of the fixture corpus: 188
 #: measured, with a small margin for adaptive-execution plan changes
-JOB_BUDGET = 225
+JOB_BUDGET = 200
 
 
 def test_engine_job_budget(spark):
-    """Each shared stage of ``Engine.run`` is evaluated once, so a build
-    plus an append of the fixture corpus stays within a pinned Spark job
-    count. Before the lake tables were materialized ahead of the flat view
-    and the author replay was materialized once, the same two runs took
-    280 jobs; they take 213 now, under local[8] with 8 shuffle partitions."""
-    sc = spark.sparkContext
-    group = "test_engine_job_budget"
+    """Each shared stage of ``Engine.run`` is evaluated once, the flat view
+    is built straight from the lake tables and the lake is read with its
+    declared schemas, so a build plus an append of the fixture corpus stays
+    within a pinned Spark job count. The same two runs took 280 jobs before
+    the shared stages were materialized once, and 213 with a cleanup stage
+    ahead of the flat view and schema inference on every lake read; they
+    take 188 now, under local[8] with 8 shuffle partitions."""
+
+    def build_and_append():
+        eng = Engine(spark)
+        eng.run(works_jsonl=w1, lake_root=lake)
+        eng.run(works_jsonl=w2, lake_root=lake)
+
     with tempfile.TemporaryDirectory() as td:
         w1, w2, lake = _write_build_and_append(td)
-        eng = Engine(spark)
-        sc.setJobGroup(group, "Engine.run build + append")
-        try:
-            eng.run(works_jsonl=w1, lake_root=lake)
-            eng.run(works_jsonl=w2, lake_root=lake)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        _, jobs = _jobs_in_group(spark, "test_engine_job_budget", build_and_append)
     print(f"Engine.run build + append: {jobs} Spark jobs")
     assert jobs <= JOB_BUDGET, f"{jobs} Spark jobs > budget {JOB_BUDGET}"

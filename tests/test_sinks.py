@@ -7,6 +7,7 @@ import tempfile
 
 
 
+from ups_crossref_etl_spark.engine import Engine
 from ups_crossref_etl_spark.fixtures import make_works
 from ups_crossref_etl_spark.plans.ingest import ingest
 from ups_crossref_etl_spark.schemas import works_raw_schema
@@ -62,6 +63,18 @@ def test_max_works_cap(spark):
     full = ingest(spark, works, seed_catalog(spark))
     all_dois = sorted(r["DOI"] for r in full["obras"].collect())
     assert sorted(obras_dois) == all_dois[:10]
+    # an append honors the cap too: the lake grows by at most k works
+    with tempfile.TemporaryDirectory() as td:
+        lake = os.path.join(td, "lake")
+        eng = Engine(spark)
+        items = make_works()
+        eng.run(works_raw=spark.createDataFrame(items[:120], schema=works_raw_schema),
+                lake_root=lake)
+        n1 = eng.load_lake(lake)["obras"].count()
+        eng.run(works_raw=spark.createDataFrame(items[120:], schema=works_raw_schema),
+                lake_root=lake, max_works=5)
+        n2 = eng.load_lake(lake)["obras"].count()
+        assert n1 < n2 <= n1 + 5
 
 
 def test_dynamic_partition_overwrite(spark):

@@ -16,7 +16,9 @@ Re-running ``run`` against the same lake is incremental and idempotent
 operation. ``python -m ups_crossref_etl_spark`` wraps this in a CLI.
 
 ``run`` materializes the five lake tables once, before it overwrites the
-lake, and builds the flat view from those materialized tables.
+lake, and builds the flat view straight from those materialized tables:
+they are unique by key and referentially closed by construction, so no
+cleanup stage sits between them (see plans/flatview.py).
 """
 
 from __future__ import annotations
@@ -29,13 +31,27 @@ from .plans import analytics, flatview
 from .plans.incremental import append_batch
 from .plans.ingest import ingest
 from .plans.runs import current_runs, finish_run, start_run
-from .schemas import runs_schema
+from .schemas import (
+    afiliaciones_schema,
+    autores_schema,
+    obra_autor_afiliacion_schema,
+    obra_tema_schema,
+    obras_schema,
+    runs_schema,
+)
 from .session import get_spark
 from .sources import sinks
 from .sources.catalog import read_catalog_csv, seed_catalog
 from .sources.crossref import read_works_fixtures
 
-TABLES = ("obras", "obra_tema", "autores", "afiliaciones", "obra_autor_afiliacion")
+#: lake table name → its declared schema
+TABLES = {
+    "obras": obras_schema,
+    "obra_tema": obra_tema_schema,
+    "autores": autores_schema,
+    "afiliaciones": afiliaciones_schema,
+    "obra_autor_afiliacion": obra_autor_afiliacion_schema,
+}
 
 
 class Engine:
@@ -49,7 +65,15 @@ class Engine:
         return os.path.exists(os.path.join(lake_root, "obras"))
 
     def load_lake(self, lake_root: str) -> dict[str, DataFrame]:
-        return {t: self.spark.read.parquet(os.path.join(lake_root, t)) for t in TABLES}
+        """The five lake tables, read with their declared schemas (no
+        schema-inference job) and in their declared column order (a
+        partition column would otherwise come last)."""
+        return {
+            t: self.spark.read.schema(schema)
+            .parquet(os.path.join(lake_root, t))
+            .select(*schema.fieldNames())
+            for t, schema in TABLES.items()
+        }
 
     # -- the end-to-end run (reference __main__ equivalent) -----------------
 
@@ -61,8 +85,10 @@ class Engine:
         lake_root: str = "./ups_lake",
         max_works: int | None = None,
     ) -> DataFrame:
-        """Ingest → catalog labeling → cleanup/flat view → write lake.
-        Returns ``vista_analisis``. Incremental when the lake exists."""
+        """Ingest → catalog labeling → flat view → write lake. Returns
+        ``vista_analisis``. Incremental when the lake exists; ``max_works``
+        caps the accepted works of this run's batch on a build and on an
+        append alike."""
         if works_raw is None:
             if works_jsonl is None:
                 raise ValueError("pass works_jsonl or works_raw")
@@ -78,7 +104,8 @@ class Engine:
 
         if self._lake_exists(lake_root):
             existing = self.load_lake(lake_root)
-            tables = append_batch(self.spark, existing, works_raw, catalog)
+            tables = append_batch(self.spark, existing, works_raw, catalog,
+                                  max_works=max_works)
         else:
             tables = ingest(self.spark, works_raw, catalog, max_works=max_works)
 
@@ -86,10 +113,9 @@ class Engine:
         # each table is also read by the flat view and the sink, so the view
         # is built on the checkpoints, not on the ingest DAG
         tables = {k: v.localCheckpoint() for k, v in tables.items()}
-        clean = flatview.clean_tables(tables)
         # read by the sink and by every later chart and SQL query
         vista = flatview.build_vista_analisis(
-            clean, catalog.select("SedeID", "Sede", "AreaAcademica")
+            tables, catalog.select("SedeID", "Sede", "AreaAcademica")
         ).localCheckpoint()
 
         sinks.write_lake(self.spark, tables, lake_root)

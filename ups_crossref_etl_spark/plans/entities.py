@@ -30,26 +30,16 @@ runs and partitions, unlike AUTOINCREMENT — documented divergence).
 
 from __future__ import annotations
 
-
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..operators import graph
 
 _RESOLVED_SCHEMA = (
     "DOI string, author_pos int, NombreBusqueda string, "
     "NombreLimpio string, Orcid string"
 )
-
-
-def _connected_components(edges: DataFrame, max_iter: int = 10) -> DataFrame:
-    """Min-label propagation over an undirected edge list (src, dst) →
-    (node, component). Delegates to the shared graph operator
-    (``operators/graph.connected_components``); author identity graphs
-    have tiny diameter so it exits in 2-4 iterations."""
-    from ..operators.graph import connected_components
-
-    return connected_components(edges, max_iter=max_iter)
 
 
 def _replay_component(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -151,7 +141,8 @@ def resolve_authors(
     ).otherwise(name_node)
     edges = occ.select(name_node.alias("src"), orcid_node.alias("dst")).distinct()
 
-    comp = _connected_components(edges)
+    # through the module attribute, so a wrapper installed on it sees the call
+    comp = graph.connected_components(edges)
     # read by the component-size guard and by the replay
     occ_c = occ.join(
         comp.withColumnRenamed("node", "_nn"),

@@ -1,9 +1,23 @@
-"""EP3 — cleanup + flat analytics view (reference
-``pandas_cleanup_and_flatview`` :445-533, transliterated to DataFrames).
+"""EP3 — flat analytics view (reference ``pandas_cleanup_and_flatview``
+:445-533, transliterated to DataFrames).
 
-Stages: renormalize (F1/F3 twins, F11 coercion) → dropDuplicates (A3) →
-referential-integrity semi-joins (P9/J9) → enrichment join chain (J1) →
-groupBy(DOI) sorted-set aggregates (A1/A2) → ``vista_analisis`` (K8).
+Stages: enrichment join chain (J1) → groupBy(DOI) sorted-set aggregates
+(A1/A2) → ``vista_analisis`` (K8), read straight from the five lake tables.
+
+Semantic decisions (each deliberate):
+- The reference's ``*_clean`` stage (:472-495: renormalize, coerce,
+  dedup, P9/J9 integrity filters) is not a stage here. The reference
+  needs it because its SQLite tables grow through per-item upserts. The
+  lake tables are unique by key and referentially closed by construction:
+  ``ingest`` keeps one row per DOI, ends the bridge tables in ``distinct``
+  and groups the entity tables by their natural keys; every bridge DOI
+  passes the same P7 gate and ``max_works`` cap as ``obras``; every
+  AutorID/AfiliacionID is hashed from a key its entity table is built
+  from; and the ``plans/incremental.py`` merges keep all of that.
+- The reference's second normalization pass is NOT replicated: DOI
+  standardization and ``html.unescape`` are not idempotent
+  ("&amp;amp;" → "&amp;" → "&"), so a second pass would make the view
+  drift from ``obras``.
 
 Scale: the J1 chain broadcasts autores/afiliaciones/sedes when small; at
 100 TB the OAA fact shuffles once on DOI for the A1 group-back — the same
@@ -15,59 +29,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import functions as fx
-
-
-def clean_tables(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
-    """The ``*_clean`` stage (:472-495): renormalize, coerce, dedup,
-    integrity-filter. Our ingest already normalizes, so renormalization is
-    an idempotence guarantee, not a correction."""
-    obras = (
-        tables["obras"]
-        .select(
-            fx.standardize_doi(F.col("DOI")).alias("DOI"),
-            fx.norm_text_nfc(F.col("Titulo")).alias("Titulo"),
-            F.col("Anio").cast("int").alias("Anio"),
-            fx.norm_text_nfc(F.col("Revista")).alias("Revista"),
-            fx.norm_text_nfc(F.col("Editorial")).alias("Editorial"),
-            F.col("Tipo"),
-            fx.try_long(F.col("Citas").cast("string")).alias("Citas"),
-            fx.try_long(F.col("Referencias").cast("string")).alias("Referencias"),
-            F.col("FechaPublicacion"),
-        )
-        .dropDuplicates(["DOI"])
-    )
-    autores = tables["autores"].dropDuplicates(["AutorID"])
-    afiliaciones = tables["afiliaciones"].dropDuplicates(["AfiliacionID"])
-    oaa = tables["obra_autor_afiliacion"].dropDuplicates(["DOI", "AutorID", "AfiliacionID"])
-    temas = tables["obra_tema"].dropDuplicates(["DOI", "Tema"])
-
-    # P9/J9 referential integrity — semi-joins, never collected sets (:491-495)
-    oaa = (
-        oaa.join(obras.select("DOI"), "DOI", "left_semi")
-        .join(autores.select("AutorID"), "AutorID", "left_semi")
-        .join(afiliaciones.select("AfiliacionID"), "AfiliacionID", "left_semi")
-    )
-    temas = temas.join(obras.select("DOI"), "DOI", "left_semi")
-
-    return {
-        "obras_clean": obras,
-        "autores_clean": autores,
-        "afiliaciones_clean": afiliaciones,
-        "obra_autor_afiliacion_clean": oaa,
-        "obra_tema_clean": temas,
-    }
-
 
 def build_vista_analisis(
-    clean: dict[str, DataFrame], sedes_areas: DataFrame
+    tables: dict[str, DataFrame], sedes_areas: DataFrame
 ) -> DataFrame:
-    """J1 chain + A1/A2 aggregates → the denormalized analytics table
-    (:505-531). Multi-valued columns are '; '-joined sorted sets — set
-    semantics and codepoint sort are load-bearing for oracle hashing."""
-    oaa = clean["obra_autor_afiliacion_clean"]
-    autores = clean["autores_clean"].select("AutorID", "NombreLimpio")
-    afi = clean["afiliaciones_clean"].select(
+    """J1 chain + A1/A2 aggregates over the lake tables → the denormalized
+    analytics table (:505-531). Multi-valued columns are '; '-joined sorted
+    sets — set semantics and codepoint sort are load-bearing for oracle
+    hashing."""
+    oaa = tables["obra_autor_afiliacion"]
+    autores = tables["autores"].select("AutorID", "NombreLimpio")
+    afi = tables["afiliaciones"].select(
         "AfiliacionID", "CadenaLiteral", "SedeID", "CountryCode", "CountryName", "EsUPS"
     )
     sedes = sedes_areas.select("SedeID", "Sede", "AreaAcademica")
@@ -93,10 +65,10 @@ def build_vista_analisis(
         F.max("EsUPS").alias("UPS_Flag"),
     )
 
-    temas_g = clean["obra_tema_clean"].groupBy("DOI").agg(sset("Tema", "Temas"))
+    temas_g = tables["obra_tema"].groupBy("DOI").agg(sset("Tema", "Temas"))
 
     return (
-        clean["obras_clean"]
+        tables["obras"]
         .join(flat, "DOI", "left")  # J2
         .join(temas_g, "DOI", "left")  # J3
         .withColumn("Temas", F.coalesce("Temas", F.lit("")))  # :529 missing → ''

@@ -74,10 +74,13 @@ def append_batch(
     existing: dict[str, DataFrame],
     works_raw: DataFrame,
     catalog: DataFrame,
+    max_works: int | None = None,
 ) -> dict[str, DataFrame]:
     """One incremental run: transform the new batch (seeding author
-    resolution with the existing ``autores``) and merge every table."""
-    new = ingest(spark, works_raw, catalog, seed_autores=existing.get("autores"))
+    resolution with the existing ``autores``; ``max_works`` caps the
+    batch's accepted works as in ``ingest``) and merge every table."""
+    new = ingest(spark, works_raw, catalog, seed_autores=existing.get("autores"),
+                 max_works=max_works)
     return {
         "obras": merge_insert_ignore(existing["obras"], new["obras"], ["DOI"]),
         "obra_tema": merge_insert_ignore(

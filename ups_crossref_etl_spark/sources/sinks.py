@@ -94,11 +94,9 @@ def write_lake(
 ) -> None:
     """Persist the full bibliometric table set with the layout policy."""
     for name, df in tables.items():
+        # partition column must be non-null for pruning to help; null
+        # years land in a __HIVE_DEFAULT_PARTITION__ directory (kept).
         pb = ["Anio"] if name in ("obras", "vista_analisis") else None
-        if pb and name == "obras":
-            # partition column must be non-null for pruning to help; null
-            # years land in a __HIVE_DEFAULT_PARTITION__ directory (kept).
-            pass
         write_table(df, f"{root}/{name}", partition_by=pb)
 
 
