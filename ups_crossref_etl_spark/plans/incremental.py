@@ -1,23 +1,30 @@
 """Incremental multi-run ingest — the reference's operational model
 ("run 4-5 times until the window is fully captured", docs §A-tomar-en-
-cuenta) as idempotent lake merges.
+cuenta) as lake appends.
 
-Per-table semantics (all batch-side, no in-place mutation):
+One rule makes an append: a work already in the lake is skipped before any
+of its mentions is resolved, as the reference probes each DOI against
+``Obras`` before its author loop (:596-601). ``ingest(existing=...)`` does
+it with one anti-join on the lake's ``obras.DOI``. Re-resolving a stored
+work is not idempotent (the seeded replay can map a re-fetched mention to
+another author than the first run did), so no later merge could repair
+it. Works the P7 gate rejected are not in ``obras`` and are re-probed, as
+in the reference; that changes no table, since they never reach the
+bridge tables and every name and ORCID they carry already exists.
 
-- ``obras`` / ``obra_tema`` / ``obra_autor_afiliacion``: INSERT OR IGNORE
-  (K3) → anti-join the new batch against existing PKs, append.
-- ``autores``: K4 upsert — existing rows win (first-seen NombreLimpio),
-  missing ORCIDs backfill from the new batch; genuinely-new authors
-  append. Cross-run identity continuity comes from seeding the resolver
-  with the existing table (see ``entities.resolve_authors(seed=...)``),
-  so a mention of a known ORCID under a new spelling maps to the existing
-  author, exactly like the reference's DB probe.
+- ``obras`` / ``obra_tema`` / ``obra_autor_afiliacion``: K3 insert-or-
+  ignore is a union — no new row's DOI is in the lake.
+- ``autores``: the new run's table. Resolution is seeded with the
+  existing table (``entities.resolve_authors(seed_autores=...)``), so it
+  returns every existing author with its first-seen NombreLimpio (K4) and
+  backfilled ORCID, plus the new ones; a known ORCID under a new spelling
+  maps to the existing author, as the reference's DB probe does.
 - ``afiliaciones``: K5/K6 monotone merge — CadenaLiteral/first-fill wins,
   EsUPS = max, country = first non-null; SedeID from the new run (the
   reference re-labels every run from the current catalog, EP2).
 
-At 100 TB each merge is one anti-join or full-outer join on the natural
-key — the same shuffle an append would need anyway.
+At 100 TB an append joins the lake once on the ``obras`` DOI column and
+once on the afiliaciones key; the bridge tables are never joined.
 """
 
 from __future__ import annotations
@@ -26,26 +33,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .ingest import ingest
-
-
-def merge_insert_ignore(existing: DataFrame, new: DataFrame, keys: list[str]) -> DataFrame:
-    return existing.unionByName(new.join(existing.select(*keys), keys, "left_anti"))
-
-
-def merge_autores(existing: DataFrame, new: DataFrame) -> DataFrame:
-    ex = existing.alias("e")
-    nw = new.alias("n")
-    merged = (
-        ex.join(nw, F.col("e.NombreBusqueda") == F.col("n.NombreBusqueda"), "left")
-        .select(
-            F.col("e.AutorID").alias("AutorID"),
-            F.col("e.NombreLimpio").alias("NombreLimpio"),
-            F.col("e.NombreBusqueda").alias("NombreBusqueda"),
-            F.coalesce(F.col("e.Orcid"), F.col("n.Orcid")).alias("Orcid"),  # backfill
-        )
-    )
-    appended = new.join(existing.select("NombreBusqueda"), "NombreBusqueda", "left_anti")
-    return merged.unionByName(appended.select("AutorID", "NombreLimpio", "NombreBusqueda", "Orcid"))
 
 
 def merge_afiliaciones(existing: DataFrame, new: DataFrame) -> DataFrame:
@@ -76,21 +63,16 @@ def append_batch(
     catalog: DataFrame,
     max_works: int | None = None,
 ) -> dict[str, DataFrame]:
-    """One incremental run: transform the new batch (seeding author
-    resolution with the existing ``autores``; ``max_works`` caps the
-    batch's accepted works as in ``ingest``) and merge every table."""
-    new = ingest(spark, works_raw, catalog, seed_autores=existing.get("autores"),
-                 max_works=max_works)
+    """One incremental run: transform the batch's works that are not yet
+    in the lake (``max_works`` caps how many of them are accepted, as in
+    ``ingest``) and add them to every table."""
+    new = ingest(spark, works_raw, catalog, existing=existing, max_works=max_works)
     return {
-        "obras": merge_insert_ignore(existing["obras"], new["obras"], ["DOI"]),
-        "obra_tema": merge_insert_ignore(
-            existing["obra_tema"], new["obra_tema"], ["DOI", "Tema"]
+        "obras": existing["obras"].unionByName(new["obras"]),
+        "obra_tema": existing["obra_tema"].unionByName(new["obra_tema"]),
+        "obra_autor_afiliacion": existing["obra_autor_afiliacion"].unionByName(
+            new["obra_autor_afiliacion"]
         ),
-        "obra_autor_afiliacion": merge_insert_ignore(
-            existing["obra_autor_afiliacion"],
-            new["obra_autor_afiliacion"],
-            ["DOI", "AutorID", "AfiliacionID"],
-        ),
-        "autores": merge_autores(existing["autores"], new["autores"]),
+        "autores": new["autores"],
         "afiliaciones": merge_afiliaciones(existing["afiliaciones"], new["afiliaciones"]),
     }

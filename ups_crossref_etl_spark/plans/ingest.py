@@ -248,17 +248,21 @@ def ingest(
     spark: SparkSession,
     works_raw: DataFrame,
     catalog: DataFrame,
-    seed_autores: DataFrame | None = None,
+    existing: dict[str, DataFrame] | None = None,
     max_works: int | None = None,
 ) -> dict[str, DataFrame]:
     """Full EP1: returns {obras, obra_tema, autores, afiliaciones,
     obra_autor_afiliacion} — only works passing the P7 UPS gate.
-    ``seed_autores``: prior-run author table for incremental identity
-    continuity (see plans/incremental.py).
+    ``existing``: the lake's tables, on an append. A work whose DOI is in
+    ``existing["obras"]`` is skipped before any of its mentions is
+    resolved (the reference's S6 DOI probe, :596-601), and author
+    resolution is seeded with ``existing["autores"]``; the returned
+    ``autores`` then holds every existing author too (see
+    plans/incremental.py).
     ``max_works``: O2 cap (reference MAX_WORKS :27,564-566) — applied to
-    *accepted* (gated) works, per SURVEY §2.7 O2. The reference's cap is
-    page-order-dependent; ours takes the first N in DOI order so reruns
-    are reproducible."""
+    *accepted* (gated, and on an append new) works, per SURVEY §2.7 O2.
+    The reference's cap is page-order-dependent; ours takes the first N in
+    DOI order so reruns are reproducible."""
     # A DataFrame read by more than one action is materialized once, by a
     # local checkpoint: the ContextCleaner frees its blocks, so no cached
     # table outlives the run. works (JSON scan, Unicode pandas_udfs, DOI
@@ -266,7 +270,10 @@ def ingest(
     # obra_tema jobs. Eager: the mention table's first job reads it from
     # two parallel stages (the self-joins in tag_countries/label_sedes),
     # which would both compute a lazy checkpoint's partitions.
-    works = normalize_works(works_raw).localCheckpoint()
+    works = normalize_works(works_raw)
+    if existing is not None:
+        works = works.join(existing["obras"].select("DOI"), "DOI", "left_anti")
+    works = works.localCheckpoint()
     aff_rows = explode_author_affiliations(works)
     aff_rows = tag_countries(aff_rows, country_pattern_df(spark))
     aff_rows = label_sedes(aff_rows, catalog)
@@ -315,6 +322,7 @@ def ingest(
     from .entities import resolve_authors
 
     afiliaciones = build_afiliaciones(aff_rows)
+    seed_autores = None if existing is None else existing["autores"]
     autores, author_map = resolve_authors(aff_rows, seed_autores=seed_autores)
 
     # A4: per (DOI, author) the set of affiliations + sequence promotion
