@@ -4,9 +4,11 @@ handles (citations in each function's docstring)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ups_crossref_etl_spark import functions as fx
+from ups_crossref_etl_spark.functions.text import py_word_tokens, word_tokens
 
 
 def _one(spark, col, **litcols):
@@ -31,6 +33,17 @@ def test_norm_text_nfkd_lower(spark):
     a = _one(spark, fx.norm_text_nfkd_lower(F.col("s")), s="José GARCÍA")
     b = _one(spark, fx.norm_text_nfkd_lower(F.col("s")), s="jose garcia")
     assert a == b == "jose garcia"
+
+
+@pytest.mark.parametrize(
+    "text",
+    [None, "", "--", "Héllo-World 42", "a_b", "x\ty\nz", "ÀÉÎ", "10.5736/a.64ac"],
+)
+def test_word_tokens_spark_and_python_agree(spark, text):
+    # the Spark tokenizer and its Python twin (BPE's UDF bodies) must
+    # split every text the same way; a null text has no words
+    got = _one(spark, word_tokens(F.col("s")), s=text)
+    assert (got if got is not None else []) == py_word_tokens(text)
 
 
 def test_standardize_doi_variants(spark):

@@ -1188,12 +1188,13 @@ def test_ivfpq_subset_of_probed_lists(spark):
 
 def test_bpe_train_learns_planted_merges(spark):
     from ups_crossref_etl_spark.operators.bpe import (
-        bpe_segment, bpe_train, word_vocab,
+        bpe_encode, bpe_segment, bpe_train, word_vocab,
     )
 
-    # classic BPE corpus: "ab" dominates pair counts, then "abc"
-    rows = [(1, "abc abc abc abd"), (2, "abc abd xy")]
-    d = spark.createDataFrame(rows, ["doc_id", "text"])
+    # classic BPE corpus: "ab" dominates pair counts, then "abc"; doc 3's
+    # null text has no words (not the word "none")
+    rows = [(1, "abc abc abc abd"), (2, "abc abd xy"), (3, None)]
+    d = spark.createDataFrame(rows, "doc_id long, text string")
     vocab = {r["word"]: r["n"] for r in word_vocab(d, "text").collect()}
     assert vocab == {"abc": 4, "abd": 2, "xy": 1}
     merges = bpe_train(d, "text", n_merges=3)
@@ -1203,7 +1204,10 @@ def test_bpe_train_learns_planted_merges(spark):
     seg = {r["doc_id"]: (r["n_words"], r["n_bpe_tokens"])
            for r in bpe_segment(d, "text", "doc_id", merges).collect()}
     # doc1: abc->1 token x3, abd->1 -> 4 tokens; doc2: abc, abd, x+y
-    assert seg == {1: (4, 4), 2: (3, 4)}
+    assert seg == {1: (4, 4), 2: (3, 4), 3: (0, 0)}
+    enc = {r["doc_id"]: (r["n_tokens"], r["tokens_str"])
+           for r in bpe_encode(d, "text", "doc_id", merges).collect()}
+    assert enc == {1: (4, "abc abc abc abd"), 2: (4, "abc abd x y"), 3: (0, "")}
 
 
 def test_bpe_merge_leftmost_nonoverlapping(spark):

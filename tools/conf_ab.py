@@ -17,22 +17,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import _best_of, _sentinel, _shuffle_sentinel  # noqa: E402
 from ups_crossref_etl_spark.plans.registry import load_all  # noqa: E402
 from ups_crossref_etl_spark.session import get_spark  # noqa: E402
-
-
-def best_of(run, n: int = 2) -> float:
-    best = None
-    for _ in range(n):
-        t0 = time.time()
-        run()
-        dt = time.time() - t0
-        best = dt if best is None or dt < best else best
-    return round(best, 3)
 
 
 def main() -> None:
@@ -41,8 +31,6 @@ def main() -> None:
     extra = json.loads(os.environ.get("CONF_JSON", "{}"))
     spark = get_spark("conf_ab", extra_conf=extra)
     specs = load_all()
-    from bench import _sentinel, _shuffle_sentinel  # noqa: E402
-
     specs["q1_pricing_summary"].fn(spark, sf_dir).count()
     out: dict[str, object] = {
         "conf": extra,
@@ -53,7 +41,7 @@ def main() -> None:
     for name in names:
         fn = specs[name].fn
         spark.sparkContext.setJobDescription(f"conf_ab {name}")
-        times[name] = best_of(lambda: fn(spark, sf_dir).collect())
+        times[name] = _best_of(lambda: fn(spark, sf_dir).collect())
     out["queries"] = times
     out["total"] = round(sum(times.values()), 3)
     out["sentinel_post"] = _sentinel(spark)

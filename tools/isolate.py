@@ -1,10 +1,11 @@
-"""Round-13 isolation harness: time individual queries with the noop sink
+"""Query isolation harness: time individual queries with the noop sink
 (guide §1.4 — computation only, no result serialization to the driver) and
-dump their .explain('formatted') to plans/r13/<query>_<tag>.txt.
+dump their .explain('formatted') to <out_dir>/<query>_<tag>.txt.
 
 Usage:
-    python tools/isolate_r13.py <tag> <query> [query ...]
-    python tools/isolate_r13.py --time-only <tag> <query> [...]
+    python tools/isolate.py <out_dir> <tag> <query> [query ...]
+    python tools/isolate.py <out_dir> --time-only <tag> <query> [...]
+    python tools/isolate.py <out_dir> --plans-only <tag> <query> [...]
 
 ``tag`` is 'before' or 'after' (anything else works too, e.g. 'probe').
 Prints one JSON line {query: {"noop_s": best-of-2, "collect_s": best-of-2}}.
@@ -20,26 +21,16 @@ import io
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import _best_of  # noqa: E402
 from ups_crossref_etl_spark.plans.registry import load_all  # noqa: E402
 from ups_crossref_etl_spark.session import get_spark  # noqa: E402
 
 
-def best_of(run, n: int = 2) -> float:
-    best = None
-    for _ in range(n):
-        t0 = time.time()
-        run()
-        dt = time.time() - t0
-        best = dt if best is None or dt < best else best
-    return round(best, 3)
-
-
 def main() -> None:
-    args = sys.argv[1:]
+    out_dir, args = sys.argv[1], sys.argv[2:]
     time_only = plans_only = False
     if args and args[0] == "--time-only":
         time_only = True
@@ -49,12 +40,8 @@ def main() -> None:
         args = args[1:]
     tag, names = args[0], args[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", "r13",
-    )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("isolate_r13")
+    spark = get_spark("isolate")
     specs = load_all()
     # warmup: JVM/codegen/parquet-footer caches (same as bench.py)
     specs["q1_pricing_summary"].fn(spark, sf_dir).count()
@@ -75,16 +62,16 @@ def main() -> None:
             continue
         if name.startswith("q_stream_"):
             # streaming gates execute eagerly inside fn(); noop is moot
-            sc.setJobDescription(f"r13 {name} collect")
-            entry["collect_s"] = best_of(lambda: fn(spark, sf_dir).collect())
+            sc.setJobDescription(f"isolate {name} collect")
+            entry["collect_s"] = _best_of(lambda: fn(spark, sf_dir).collect())
         else:
-            sc.setJobDescription(f"r13 {name} noop")
-            entry["noop_s"] = best_of(
+            sc.setJobDescription(f"isolate {name} noop")
+            entry["noop_s"] = _best_of(
                 lambda: fn(spark, sf_dir)
                 .write.format("noop").mode("overwrite").save()
             )
-            sc.setJobDescription(f"r13 {name} collect")
-            entry["collect_s"] = best_of(lambda: fn(spark, sf_dir).collect())
+            sc.setJobDescription(f"isolate {name} collect")
+            entry["collect_s"] = _best_of(lambda: fn(spark, sf_dir).collect())
         sc.setJobDescription(None)
         res[name] = entry
         print(json.dumps({name: entry}), flush=True)

@@ -21,6 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from bench import _sentinel
 from ups_crossref_etl_spark.operators import corpus, dedup, similarity as sim
 from ups_crossref_etl_spark.session import get_spark
 from ups_crossref_etl_spark.sources.lake import read_table
@@ -45,20 +46,6 @@ def timed(fn):
     return round(time.time() - t0, 2), out
 
 
-def sentinel(spark) -> float:
-    """Contention sentinel (bench.py's probe, same constants): a fixed
-    CPU-bound sum over 400M ids across 32 tasks, ~1.2 s on a quiet box.
-    Timed before and after the probe run and stamped into every entry
-    written by that run, so a contended measurement carrying a scale
-    claim is self-evident from the artifact (the r10 verdict flagged
-    the legacy probes for lacking exactly this)."""
-    t0 = time.time()
-    spark.range(0, 400_000_000, 1, 32).selectExpr(
-        "sum(id * 2654435761 % 1000000007) AS s"
-    ).collect()
-    return round(time.time() - t0, 2)
-
-
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     only = set(sys.argv[2:])
@@ -67,7 +54,7 @@ def main() -> None:
     # JVM/codegen warmup so sentinel_pre measures box contention, not
     # Spark spin-up
     spark.range(0, 10_000_000, 1, 32).selectExpr("sum(id)").collect()
-    sent_pre = sentinel(spark)
+    sent_pre = _sentinel(spark)
 
     docs1 = read_table(spark, SF_DIR, "documents")
     docsN = replicate(docs1, "doc_id", n).localCheckpoint()
@@ -1586,7 +1573,7 @@ def main() -> None:
             "steps": dens,
         }
 
-    sent_post = sentinel(spark)
+    sent_post = _sentinel(spark)
     for entry in results["probes"].values():
         entry["sentinel_pre"] = sent_pre
         entry["sentinel_post"] = sent_post

@@ -10,11 +10,20 @@ primitive; Arrow-vectorized pandas_udf ONLY for Unicode NFC/NFKD
 normalization + HTML unescape, which Spark SQL lacks. These two UDFs are
 the entire Python surface of the parity layer — everything else is
 whole-stage-codegen-eligible.
+
+Word tokens (the text layer's one tokenizer contract): lowercase, split
+on ``WORD_SPLIT`` (runs of anything but ``[a-z0-9]``), drop empty
+strings. Every dedup, similarity, retrieval and text-analysis operator
+tokenizes through :func:`word_tokens`; :func:`py_word_tokens` is its
+Python twin for Arrow-batched UDF bodies (BPE), where a null text has no
+words. The DuckDB oracle SQL keeps its own copy of the regex on purpose:
+it is the independent reference the gates compare against.
 """
 
 from __future__ import annotations
 
 import html
+import re
 import unicodedata
 
 import pandas as pd
@@ -22,6 +31,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
+
+WORD_SPLIT = r"[^a-z0-9]+"
 
 
 # returnType as a DataType instance (not a DDL string): the decorator runs at
@@ -34,18 +45,19 @@ def _nfc_unescape(s: pd.Series) -> pd.Series:
     )
 
 
+def py_nfkd_deaccent_lower_unescape(x: str | None) -> str | None:
+    """HTML-unescape + NFKD + strip combining marks + lower; None stays None."""
+    if x is None:
+        return None
+    x = unicodedata.normalize("NFKD", html.unescape(x))
+    x = "".join(ch for ch in x if not unicodedata.combining(ch))
+    return x.lower()
+
+
 @pandas_udf(StringType())
 def _nfkd_deaccent_lower_unescape(s: pd.Series) -> pd.Series:
-    """HTML-unescape + NFKD + strip combining marks + lower (vectorized)."""
-
-    def one(x):
-        if x is None:
-            return None
-        x = unicodedata.normalize("NFKD", html.unescape(x))
-        x = "".join(ch for ch in x if not unicodedata.combining(ch))
-        return x.lower()
-
-    return s.map(one)
+    """:func:`py_nfkd_deaccent_lower_unescape` over a batch (vectorized)."""
+    return s.map(py_nfkd_deaccent_lower_unescape)
 
 
 def _collapse_ws_trim(col: Column) -> Column:
@@ -79,3 +91,15 @@ def strip_orcid_url(col: Column) -> Column:
 def join_str_array(col: Column, sep: str = "; ") -> Column:
     """F10: ``'; '.join(arr)`` — null array → ''."""
     return F.coalesce(F.array_join(col, sep), F.lit(""))
+
+
+def word_tokens(col: Column | str) -> Column:
+    """Lowercased ``WORD_SPLIT`` word tokens, empties dropped; null → null."""
+    return F.filter(F.split(F.lower(col), WORD_SPLIT), lambda t: t != F.lit(""))
+
+
+def py_word_tokens(text: str | None) -> list[str]:
+    """Python twin of :func:`word_tokens`; ``[]`` for None."""
+    if text is None:
+        return []
+    return [t for t in re.split(WORD_SPLIT, text.lower()) if t]

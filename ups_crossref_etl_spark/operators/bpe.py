@@ -39,6 +39,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
 
+from ..functions.text import py_word_tokens, word_tokens
+
 #: Vocabulary bound for the driver-side BPE merge loop (the cox/ALS
 #: driver-reduction pattern): below it, training collects the (word, n)
 #: vocab ONCE and runs the merge rounds in Python — identical results,
@@ -97,12 +99,7 @@ def word_vocab(df: DataFrame, text_col: str) -> DataFrame:
     return (
         spread_scan(df.select(text_col))
         .select(
-            F.explode(
-                F.filter(
-                    F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
-                    lambda t: t != F.lit(""),
-                )
-            ).alias("word")
+            F.explode(word_tokens(F.col(text_col))).alias("word")
         )
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -186,13 +183,10 @@ def bpe_segment(
     mlist = [tuple(m) for m in merges]
 
     def seg(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import re
-
-        word_re = re.compile(r"[^a-z0-9]+")
         for b in batches:
             n_words, n_toks = [], []
             for text in b["_text"]:
-                words = [w for w in word_re.split(str(text).lower()) if w]
+                words = py_word_tokens(text)
                 total = 0
                 for w in words:
                     syms = list(w)
@@ -251,9 +245,6 @@ def bpe_encode(
     mlist = [tuple(m) for m in merges]
 
     def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import re
-
-        word_re = re.compile(r"[^a-z0-9]+")
         memo: dict[str, list[str]] = {}
 
         def word_toks(w: str) -> list[str]:
@@ -269,9 +260,8 @@ def bpe_encode(
             ids, ntoks, toks = [], [], []
             for i, text in zip(b["_id"], b["_text"]):
                 out: list[str] = []
-                for w in word_re.split(str(text).lower()):
-                    if w:
-                        out.extend(word_toks(w))
+                for w in py_word_tokens(text):
+                    out.extend(word_toks(w))
                 ids.append(i)
                 ntoks.append(len(out))
                 toks.append(" ".join(out))

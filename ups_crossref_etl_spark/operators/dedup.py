@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.text import word_tokens
+
 # --------------------------------------------------------------------------
 # Exact dedup
 # --------------------------------------------------------------------------
@@ -59,18 +61,11 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _tokens(text_col: Column) -> Column:
-    """Lowercased word tokens (split on non-alphanumeric runs)."""
-    return F.filter(
-        F.split(F.lower(text_col), r"[^a-z0-9]+"), lambda t: t != F.lit("")
-    )
-
-
 def shingles(text_col: Column, k: int = 3) -> Column:
     """k-word shingles as a string array (per-row higher-order-function
     form — convenient for tiny inputs/tests; the scale path is
     ``shingle_hash_rows`` below, which stays in whole-stage codegen)."""
-    toks = _tokens(text_col)
+    toks = word_tokens(text_col)
     n = F.size(toks)
     idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
     return F.when(
@@ -101,7 +96,7 @@ def shingle_hash_rows(
 
     toks = spread_scan(df.select(F.col(id_col), F.col(text_col))).select(
         F.col(id_col).alias("_id"),
-        F.posexplode(_tokens(F.col(text_col))).alias("_pos", "_tok"),
+        F.posexplode(word_tokens(F.col(text_col))).alias("_pos", "_tok"),
     )
     w = Window.partitionBy("_id").orderBy("_pos")
     wn = Window.partitionBy("_id")
@@ -590,7 +585,7 @@ def simhash_table(
         raise ValueError(f"unknown token_hash {token_hash!r}")
     exploded = df.select(
         F.col(id_col).alias("_id"),
-        F.explode(_tokens(F.col(text_col))).alias("_tok"),
+        F.explode(word_tokens(F.col(text_col))).alias("_tok"),
     ).select("_id", h.alias("_h"))
     votes = exploded.groupBy("_id").agg(
         *[

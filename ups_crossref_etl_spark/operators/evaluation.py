@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import word_tokens
+
 __all__ = ["binary_auc", "ranking_metrics"]
 
 
@@ -896,9 +898,7 @@ def rouge_n(
     """
 
     def grams(col: str, alias: str) -> DataFrame:
-        toks = F.filter(
-            F.split(F.lower(F.col(col)), r"[^a-z0-9]+"), lambda t: t != ""
-        )
+        toks = word_tokens(F.col(col))
         # Guard short texts: sequence(1, 0) is DESCENDING in Spark
         # ([1, 0]) and slice(toks, 0, n) throws INVALID_PARAMETER_VALUE,
         # so a text with < n tokens must short-circuit to an empty gram

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import word_tokens
+
 __all__ = ["hashed_features"]
 
 
@@ -41,12 +43,7 @@ def hashed_features(
     """
     toks = df.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("_id"),
-        F.explode_outer(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
-                lambda t: t != F.lit(""),
-            )
-        ).alias("_t"),
+        F.explode_outer(word_tokens(F.col(text_col))).alias("_t"),
     )
     h = F.conv(F.substring(F.md5("_t"), 1, 15), 16, 10).cast("bigint")
     per = toks.select(

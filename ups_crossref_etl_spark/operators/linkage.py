@@ -38,10 +38,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import WORD_SPLIT
+
 
 def _block_tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     toks = F.filter(
-        F.array_distinct(F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+")),
+        F.array_distinct(F.split(F.lower(F.col(text_col)), WORD_SPLIT)),
         lambda t: t != F.lit(""),
     )
     return df.select(F.col(id_col).alias("_id"), F.explode(toks).alias("_tok"))

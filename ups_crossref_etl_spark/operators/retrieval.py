@@ -25,13 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _tokens(text_col: Column) -> Column:
-    """Lowercased word tokens (the corpus-wide tokenizer contract shared
-    with text_analysis/dedup: split on non-alphanumerics, drop empties)."""
-    return F.filter(
-        F.split(F.lower(text_col), r"[^a-z0-9]+"), lambda t: t != F.lit("")
-    )
+from ..functions.text import word_tokens
 
 
 def bm25_topk(
@@ -58,7 +52,7 @@ def bm25_topk(
     q = sorted({t.lower() for t in query_tokens})
 
     toks = df.select(
-        F.col(id_col).alias("_id"), _tokens(F.col(text_col)).alias("_toks")
+        F.col(id_col).alias("_id"), word_tokens(F.col(text_col)).alias("_toks")
     )
     dl = toks.select("_id", F.size("_toks").alias("_dl"))
     # N and avgdl over the WHOLE corpus (not just matches) — one scalar row.
@@ -179,7 +173,7 @@ def tfidf_knn_graph(
     """
     if ngram < 1:
         raise ValueError("tfidf_knn_graph: ngram must be >= 1")
-    warr = _tokens(F.col(text_col))
+    warr = word_tokens(F.col(text_col))
     if ngram == 1:
         terms = warr
     else:
@@ -305,7 +299,7 @@ def inverted_index(
     tf = (
         df.select(
             F.col(id_col).alias("_id"),
-            F.explode(_tokens(F.col(text_col))).alias("_t"),
+            F.explode(word_tokens(F.col(text_col))).alias("_t"),
         )
         .groupBy("_t", "_id")
         .agg(F.count(F.lit(1)).alias("_tf"))

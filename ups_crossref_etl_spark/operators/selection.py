@@ -32,17 +32,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import word_tokens
 from .sampling import hash_bucket
 
 __all__ = ["hashed_grams", "dsir_weights", "dsir_select"]
 
-
-def _tokens(text_col: Column) -> Column:
-    """Lowercased word tokens — the repo-wide ``[a-z0-9]+`` convention
-    (same tokenization as text_analysis.token_frequencies / bpe)."""
-    return F.filter(
-        F.split(F.lower(text_col), r"[^a-z0-9]+"), lambda t: t != F.lit("")
-    )
 
 
 def hashed_grams(
@@ -58,7 +52,7 @@ def hashed_grams(
     ``transform`` + ``concat``); the only shuffle is the
     groupBy(doc, bucket) partial-aggregated count.
     """
-    toks = _tokens(F.col(text_col))
+    toks = word_tokens(F.col(text_col))
     bigrams = F.transform(
         F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
         lambda t, i: F.concat(t, F.lit(" "), F.element_at(toks, i + 2)),
@@ -212,9 +206,7 @@ def max_coverage_select(
     """
     from pyspark.sql import functions as F
 
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"), lambda t: t != F.lit("")
-    )
+    toks = word_tokens(F.col(text_col))
     if shingle_width > 1:
         w_ = shingle_width
         elems = F.when(

@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .retrieval import _tokens
+from ..functions.text import word_tokens
 
 
 def setsim_join(
@@ -61,7 +61,7 @@ def setsim_join(
         raise ValueError("setsim_join: threshold must be in (0, 1]")
     if shingle_width < 1:
         raise ValueError("setsim_join: shingle_width must be >= 1")
-    toks = _tokens(F.col(text_col))
+    toks = word_tokens(F.col(text_col))
     if shingle_width == 1:
         elems = toks
     else:
@@ -183,7 +183,7 @@ def containment_join(
     """
     if not 0 < threshold <= 1:
         raise ValueError("containment_join: threshold must be in (0, 1]")
-    toks = _tokens(F.col(text_col))
+    toks = word_tokens(F.col(text_col))
     w_ = shingle_width
     if w_ == 1:
         elems = toks
@@ -293,9 +293,7 @@ def bounded_jaccard_edges(
     """
     toks = docs.select(
         F.col(id_col),
-        F.array_distinct(
-            F.filter(F.split(F.lower(text_col), r"[^a-z0-9]+"), lambda t: t != F.lit(""))
-        ).alias("tok"),
+        F.array_distinct(word_tokens(text_col)).alias("tok"),
     )
     a = toks.select(F.col(id_col).alias("src"), F.col("tok").alias("ta"))
     b = toks.select(F.col(id_col).alias("dst"), F.col("tok").alias("tb"))

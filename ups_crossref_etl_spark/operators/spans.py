@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import word_tokens
+
 __all__ = ["remove_common_spans", "long_repeated_spans"]
 
 
@@ -59,10 +61,7 @@ def remove_common_spans(
     """
     from ..sources.lake import spread_scan
 
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
-        lambda t: t != F.lit(""),
-    )
+    toks = word_tokens(F.col(text_col))
     # r14 (r13 verdict #6): the tokenize+gram explode is pure per-row
     # map work over content-derived md5 keys — layout-invariant by
     # construction (grouped exact counts, order-insensitive collect_set
@@ -177,10 +176,7 @@ def long_repeated_spans(
     t = int(min_len)
     from ..sources.lake import spread_scan
 
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
-        lambda x: x != F.lit(""),
-    )
+    toks = word_tokens(F.col(text_col))
     # r14 (r13 verdict #6): spread + lazy checkpoints, same invariance
     # argument as remove_common_spans — md5 keys are content-derived,
     # every aggregate is an exact count/min/max, windows order by

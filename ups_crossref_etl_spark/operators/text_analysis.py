@@ -12,6 +12,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import word_tokens
+
 # Stopword marker lists per language for the n-gram/stopword heuristic.
 # Deliberately tiny + deterministic; the operator contract is the scoring
 # scheme, not lexicon quality (swap in a real lexicon at deploy time).
@@ -115,7 +117,7 @@ def fingerprint(
     hash cost). All arithmetic stays below 2^36 so bigint never wraps:
     acc < mod ≈ 2^31, acc*31 + tokhash%mod < 2^36 + 2^31.
     """
-    toks = F.filter(F.split(F.lower(text_col), r"[^a-z0-9]+"), lambda t: t != F.lit(""))
+    toks = word_tokens(text_col)
     if token_hash == "md5_48":
         def th(t: Column) -> Column:
             return F.conv(F.substring(F.md5(t), 1, 12), 16, 10).cast("bigint")
@@ -149,12 +151,7 @@ def token_frequencies(
     frequencies stay exact either way."""
     toks = df.select(
         F.col(id_col).alias("_id"),
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
-                lambda t: t != F.lit(""),
-            )
-        ).alias("token"),
+        F.explode(word_tokens(F.col(text_col))).alias("token"),
     )
     doc_freq = (
         F.count_distinct("_id") if exact_doc_freq else F.approx_count_distinct("_id")
@@ -222,12 +219,7 @@ def unigram_nll(
     tf = (
         df.select(
             F.col(id_col).alias("_id"),
-            F.explode(
-                F.filter(
-                    F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
-                    lambda t: t != F.lit(""),
-                )
-            ).alias("token"),
+            F.explode(word_tokens(F.col(text_col))).alias("token"),
         )
         .groupBy("_id", "token")
         .agg(F.count(F.lit(1)).alias("_tf"))
@@ -262,10 +254,7 @@ def bigram_nll(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     ``w1`` (vocabulary-sized), V is a broadcast scalar, and the scoring
     join + final groupBy(doc) shuffle (doc, tf, weight) rows, never text.
     """
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
-        lambda t: t != F.lit(""),
-    )
+    toks = word_tokens(F.col(text_col))
     base = df.select(F.col(id_col).alias("_id"), toks.alias("_t")).withColumn(
         "_n", F.size("_t")
     )
@@ -341,9 +330,7 @@ def self_repetition(
     """
     from . import dedup
 
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"), lambda t: t != F.lit("")
-    )
+    toks = word_tokens(F.col(text_col))
     grams = dedup.shingles(F.col(text_col), n)
     n_tok = F.size(toks)
     n_g = F.size(grams)
@@ -439,12 +426,7 @@ def token_divergence(
     two = df.filter(F.col(group_col).isin([group_a, group_b]))
     toks = two.select(
         F.col(group_col).alias("_g"),
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
-                lambda t: t != F.lit(""),
-            )
-        ).alias("token"),
+        F.explode(word_tokens(F.col(text_col))).alias("token"),
     )
     # vocab-sized; materialize once so the totals branch and the
     # smoothing branch don't each replay the corpus explode
@@ -565,12 +547,7 @@ def nb_classify(
     def toks(df: DataFrame) -> DataFrame:
         return df.select(
             F.col(id_col).alias("_id"),
-            F.explode(
-                F.filter(
-                    F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
-                    lambda t: t != F.lit(""),
-                )
-            ).alias("_tok"),
+            F.explode(word_tokens(F.col(text_col))).alias("_tok"),
         ).groupBy("_id", "_tok").agg(F.count(F.lit(1)).alias("_tf"))
 
     tr = toks(train.select(F.col(id_col), F.col(text_col)))
@@ -663,10 +640,7 @@ def pmi_collocations(
     """
     from ..sources.lake import spread_scan
 
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
-        lambda t: t != F.lit(""),
-    )
+    toks = word_tokens(F.col(text_col))
     # r13: (a) spread a single-row-group scan so the tokenize+explode
     # runs on every core (guide §2.5 input skew; no-op on multi-split
     # inputs — counts are layout-invariant); (b) checkpoint the two
@@ -757,12 +731,7 @@ def top_keywords(
     tf = (
         df.select(
             F.col(id_col).alias("_id"),
-            F.explode(
-                F.filter(
-                    F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
-                    lambda t: t != F.lit(""),
-                )
-            ).alias("token"),
+            F.explode(word_tokens(F.col(text_col))).alias("token"),
         )
         .groupBy("_id", "token")
         .agg(F.count(F.lit(1)).alias("_tf"))
@@ -829,10 +798,7 @@ def stupid_backoff_nll(
     DECIMAL(38,12) before the document sum — order-independent
     accumulation on both engines.
     """
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
-        lambda t: t != F.lit(""),
-    )
+    toks = word_tokens(F.col(text_col))
 
     def grams(frame, n):
         base = frame.select(
@@ -974,10 +940,7 @@ def kneser_ney_nll(
     row; the scoring shuffle carries (doc, tf, weight); per-term
     weights DECIMAL(38,12)-accumulated for order-independent sums.
     """
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
-        lambda t: t != F.lit(""),
-    )
+    toks = word_tokens(F.col(text_col))
 
     def grams(frame, n):
         base = frame.select(
@@ -1082,10 +1045,7 @@ def textrank_keywords(
     """
     from .pagerank import pagerank
 
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
-        lambda t: t != F.lit(""),
-    )
+    toks = word_tokens(F.col(text_col))
     base = df.select(toks.alias("_t")).filter(F.size("_t") >= 2)
     # sequence(1, 0) DESCENDS in Spark — guard short docs explicitly.
     # NB: the transform lambda must be single-arg (a two-arg lambda is
@@ -1144,10 +1104,7 @@ def zipf_power_law_stats(
     """
     from pyspark.sql import Window
 
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
-        lambda t: t != F.lit(""),
-    )
+    toks = word_tokens(F.col(text_col))
     wc = (
         df.select(F.explode(toks).alias("w"))
         .groupBy("w")
@@ -1237,12 +1194,10 @@ def ngram_novelty(
     """
     from pyspark.sql import Window
 
-    from . import dedup
-
     toks = df.select(
         F.col(id_col).alias("_id"),
         F.col(ref_col).cast("boolean").alias("_ref"),
-        F.posexplode(dedup._tokens(F.col(text_col))).alias("_pos", "_tok"),
+        F.posexplode(word_tokens(F.col(text_col))).alias("_pos", "_tok"),
     )
     w = Window.partitionBy("_id").orderBy("_pos")
     wn = Window.partitionBy("_id")
@@ -1306,11 +1261,7 @@ def vocab_richness(df: DataFrame, text_col: str) -> DataFrame:
     reduction over the count table. Everything is exact integers until
     two final rounded divisions.
     """
-    from . import dedup
-
-    toks = df.select(
-        F.explode(dedup._tokens(F.col(text_col))).alias("_t")
-    )
+    toks = df.select(F.explode(word_tokens(F.col(text_col))).alias("_t"))
     counts = toks.groupBy("_t").agg(F.count(F.lit(1)).alias("_c"))
     return counts.agg(
         F.sum("_c").cast("bigint").alias("n_tokens"),
@@ -1468,12 +1419,7 @@ def diversity_indices(
     """
     toks = df.select(
         F.col(group_col).alias("grp"),
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
-                lambda t: t != F.lit(""),
-            )
-        ).alias("_t"),
+        F.explode(word_tokens(F.col(text_col))).alias("_t"),
     )
     counts = toks.groupBy("grp", "_t").agg(
         F.count(F.lit(1)).cast("bigint").alias("_c")
@@ -1526,12 +1472,7 @@ def source_token_overlap(
     toks = (
         df.select(
             F.col(group_col).alias("_g"),
-            F.explode(
-                F.filter(
-                    F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
-                    lambda t: t != F.lit(""),
-                )
-            ).alias("_t"),
+            F.explode(word_tokens(F.col(text_col))).alias("_t"),
         )
         .distinct()
         .localCheckpoint(eager=False)  # feeds sizes AND the pair join
@@ -1762,12 +1703,7 @@ def token_dispersion(
         hash_bucket(F.col(id_col), "disp", n_parts)
         .cast("int")
         .alias("_part"),
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
-                lambda t: t != F.lit(""),
-            )
-        ).alias("token"),
+        F.explode(word_tokens(F.col(text_col))).alias("token"),
     )
     cell = toks.groupBy("token", "_part").agg(
         F.count(F.lit(1)).cast("bigint").alias("_c")
@@ -1846,12 +1782,7 @@ def keyness_g2(
     """
     toks = df.select(
         is_target.cast("int").alias("_t"),
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
-                lambda t: t != F.lit(""),
-            )
-        ).alias("token"),
+        F.explode(word_tokens(F.col(text_col))).alias("token"),
     )
     per = toks.groupBy("token").agg(
         F.sum("_t").cast("bigint").alias("n_target"),
@@ -1927,12 +1858,7 @@ def log_odds_keyness(
     """
     toks = df.select(
         is_target.cast("int").alias("_t"),
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
-                lambda t: t != F.lit(""),
-            )
-        ).alias("token"),
+        F.explode(word_tokens(F.col(text_col))).alias("token"),
     )
     per = toks.groupBy("token").agg(
         F.sum("_t").cast("bigint").alias("n_target"),
@@ -2006,12 +1932,7 @@ def heaps_fit(
         hash_bucket(F.col(id_col), "heaps", n_points)
         .cast("int")
         .alias("_b"),
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
-                lambda t: t != F.lit(""),
-            )
-        ).alias("token"),
+        F.explode(word_tokens(F.col(text_col))).alias("token"),
     )
     mass = toks.groupBy("_b").agg(
         F.count(F.lit(1)).cast("bigint").alias("_m")
@@ -2093,12 +2014,7 @@ def yule_k(df: DataFrame, text_col: str) -> DataFrame:
     scan → token groupBy → 1-row reduction, all map-side combinable.
     """
     toks = df.select(
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
-                lambda t: t != F.lit(""),
-            )
-        ).alias("token")
+        F.explode(word_tokens(F.col(text_col))).alias("token")
     )
     tf = toks.groupBy("token").agg(
         F.count(F.lit(1)).cast("bigint").alias("_f")
@@ -2164,12 +2080,7 @@ def burrows_delta(
     """
     toks = df.select(
         group_col.cast("string").alias("_g"),
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
-                lambda t: t != F.lit(""),
-            )
-        ).alias("token"),
+        F.explode(word_tokens(F.col(text_col))).alias("token"),
     ).filter(F.col("_g").isNotNull())
     cell = toks.groupBy("_g", "token").agg(
         F.count(F.lit(1)).cast("bigint").alias("_c")

@@ -41,21 +41,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-__all__ = ["word_counts", "unigram_vocab", "unigram_segment_words"]
+from ..functions.text import word_tokens
 
-_TOKEN_RE = r"[^a-z0-9]+"
+__all__ = ["word_counts", "unigram_vocab", "unigram_segment_words"]
 
 
 def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, cnt) over the corpus — split row-locally, ONE shuffle."""
     return (
         docs.select(
-            F.explode(
-                F.filter(
-                    F.split(F.lower(F.col(text_col)), _TOKEN_RE),
-                    lambda t: t != F.lit(""),
-                )
-            ).alias("word")
+            F.explode(word_tokens(F.col(text_col))).alias("word")
         )
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))

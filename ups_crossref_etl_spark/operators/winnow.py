@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import word_tokens
+
 __all__ = ["winnow_fingerprints", "winnow_overlap_pairs"]
 
 _POS_BITS = 20
@@ -47,10 +49,7 @@ _POS_MOD = 1 << _POS_BITS
 
 
 def _grams(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
-        lambda t: t != F.lit(""),
-    )
+    toks = word_tokens(F.col(text_col))
     gram_list = F.expr(
         f"transform(sequence(1, greatest(size(_toks) - {k} + 1, 0)), "
         f"i -> concat_ws(' ', slice(_toks, i, {k})))"

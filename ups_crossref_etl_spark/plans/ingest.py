@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .. import functions as fx
+from ..functions.text import py_nfkd_deaccent_lower_unescape
 
 UPS_TARGET = "Universidad Politécnica Salesiana"
 
@@ -137,13 +138,8 @@ def explode_author_affiliations(works: DataFrame) -> DataFrame:
         fx.norm_text_nfkd_lower(F.col("aff.name")).alias("aff_norm"),
     ).filter(F.col("aff_norm") != "")  # P4 empty-affiliation guard (:618-620)
 
-    ups_target_norm = UPS_TARGET  # normalized at plan build below
-    import html
-    import unicodedata
-
-    t = unicodedata.normalize("NFKD", html.unescape(ups_target_norm))
-    t = "".join(ch for ch in t if not unicodedata.combining(ch)).lower()
-    is_ups = F.col("aff_norm").contains(F.lit(t))  # P6 (:625-629)
+    ups_target_norm = py_nfkd_deaccent_lower_unescape(UPS_TARGET)
+    is_ups = F.col("aff_norm").contains(F.lit(ups_target_norm))  # P6 (:625-629)
 
     return affs.select(
         "DOI",

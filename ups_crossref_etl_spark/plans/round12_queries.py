@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import word_tokens
 from ..sources.lake import read_table
 from .registry import register
 
@@ -1016,12 +1017,7 @@ _RATERS_SQL = """
 
 def _rater_rows(spark: SparkSession, sf_dir: str, r3_partial: bool):
     docs = read_table(spark, sf_dir, "documents")
-    toks = F.size(
-        F.filter(
-            F.split(F.lower(F.col("text")), r"[^a-z0-9]+"),
-            lambda t: t != F.lit(""),
-        )
-    )
+    toks = F.size(word_tokens(F.col("text")))
     r1 = docs.select(
         F.col("doc_id").alias("u"),
         F.when(F.length("text") >= 200, F.lit("keep"))

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import word_tokens
 from ..sources.lake import read_table
 from .registry import register
 
@@ -802,11 +803,7 @@ def q_docs_unigram_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     docw = d.select(
         "doc_id",
-        F.explode(
-            F.filter(
-                F.split(F.lower("text"), r"[^a-z0-9]+"), lambda t: t != F.lit("")
-            )
-        ).alias("word"),
+        F.explode(word_tokens("text")).alias("word"),
     )
     return (
         docw.join(F.broadcast(seg), "word")

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import WORD_SPLIT, word_tokens
 from ..sources.lake import read_table
 from .registry import register
 
@@ -881,12 +882,7 @@ def q_docs_wordpiece_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame
     docw = (
         docs.select(
             "doc_id",
-            F.explode(
-                F.filter(
-                    F.split(F.lower("text"), r"[^a-z0-9]+"),
-                    lambda t: t != F.lit(""),
-                )
-            ).alias("word"),
+            F.explode(word_tokens("text")).alias("word"),
         )
         .groupBy("doc_id", "word")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -1031,10 +1027,10 @@ def q_words_edit_distance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.editjoin import edit_distance_join
 
     docs = read_table(spark, sf_dir, "documents").select(
-        F.explode(F.split(F.lower("text"), r"[^a-z0-9]+")).alias("w")
+        F.explode(F.split(F.lower("text"), WORD_SPLIT)).alias("w")
     )
     parts = read_table(spark, sf_dir, "part").select(
-        F.explode(F.split(F.lower("p_name"), r"[^a-z0-9]+")).alias("w")
+        F.explode(F.split(F.lower("p_name"), WORD_SPLIT)).alias("w")
     )
     words = (
         docs.unionByName(parts)

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import word_tokens
 from ..sources.lake import read_table
 from .registry import register
 
@@ -201,14 +202,13 @@ def q_orders_gini_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def q_docs_rbo_rankings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import dedup
     from ..operators.evaluation import rank_biased_overlap
 
     d = read_table(spark, sf_dir, "documents")
     base = d.select(
         "doc_id",
         "n_chars",
-        F.size(dedup._tokens(F.col("text"))).alias("n_words"),
+        F.size(word_tokens(F.col("text"))).alias("n_words"),
     )
     # Top-50 via orderBy().limit() — a distributed TakeOrdered — with the
     # rank window applied AFTER the limit, over 50 rows only. A global

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import word_tokens
 from ..sources.lake import read_table
 from .registry import register
 
@@ -913,9 +914,7 @@ def q_docs_rouge_short_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.evaluation import rouge_n
 
     d = read_table(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), r"[^a-z0-9]+"), lambda t: t != ""
-    )
+    toks = word_tokens(F.col("text"))
     k = F.when(F.col("doc_id") % 3 == 0, F.lit(1)).otherwise(F.lit(5))
     pairs = d.select(
         "doc_id",
